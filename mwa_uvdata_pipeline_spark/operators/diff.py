@@ -5,7 +5,8 @@ default, executed by the pinned SSINS library).
 Subtract the visibility at the previous time step per (baseline, chan,
 pol); a static sky cancels exactly, leaving noise + RFI. Flags OR
 together so a cell is flagged if either parent sample was; nsample of a
-diff is the mean of the two parent samples.
+diff is the mean of the two parent samples; ``prev_<time_col>`` is the
+earlier parent's time.
 
 Scale notes: one window shuffle partitioned by (obsid, ant1, ant2,
 chan, pol) — cardinality ~ Nbl x Nchan x Npol (10^6-10^7 for MWA), far
@@ -43,7 +44,7 @@ def time_diff(
     has_ns = nsample_col in vis.columns
     out = vis.withColumn("_prev_vis", F.lag(vis_col).over(w)).withColumn(
         "_prev_flag", F.lag(flag_col).over(w)
-    )
+    ).withColumn(f"prev_{time_col}", F.lag(time_col).over(w))
     if has_ns:
         out = out.withColumn("_prev_ns", F.lag(nsample_col).over(w))
     out = (

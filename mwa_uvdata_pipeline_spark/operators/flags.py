@@ -26,9 +26,11 @@ def flag_init(
     vis: DataFrame,
     fine_per_coarse: int = 8,
     edge_width: int = 1,
-    n_times: int | None = None,
+    time_bounds: bool = True,
 ) -> DataFrame:
-    """Flag coarse-band edges, centre fine channel, first/last times.
+    """Flag coarse-band edges, centre fine channel and, with
+    ``time_bounds``, the first/last times: the frame's min/max
+    ``time_idx``, read by one eager job.
 
     ``chan`` is the global fine-channel index; fine position within its
     coarse band = chan % fine_per_coarse. Pure predicates — no shuffle.
@@ -39,14 +41,11 @@ def flag_init(
     )
     centre = fine == F.lit(fine_per_coarse // 2)
     pred = edge | centre
-    if n_times is None:
+    if time_bounds:
         bounds = vis.agg(
             F.min("time_idx").alias("lo"), F.max("time_idx").alias("hi")
         ).first()
-        lo, hi = bounds["lo"], bounds["hi"]
-    else:
-        lo, hi = 0, n_times - 1
-    pred = pred | (F.col("time_idx") == F.lit(lo)) | (F.col("time_idx") == F.lit(hi))
+        pred = pred | F.col("time_idx").isin(bounds["lo"], bounds["hi"])
     return vis.withColumn("flag", F.col("flag") | pred)
 
 

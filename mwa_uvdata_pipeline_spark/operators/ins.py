@@ -5,19 +5,65 @@ INS = sample-weighted mean of |V| over the baseline axis per
 statistic; config surface reference configurators.py:86-97, math in the
 pinned SSINS dependency). Flagged cells are excluded from the mean.
 
+The INS is built as sums (:func:`ins_sums`, the one aggregation over
+the visibilities) and a division (:func:`ins_from_sums`), so a caller
+holding the sums can still flag whole groups before dividing.
+
 z-score (SSINS ``metric_ms``) standardizes INS across time per
-(chan, pol) — computed as group-agg + broadcast rejoin rather than a
-window so the per-group stats are one hash aggregation (the group count
-Nchan x Npol is tiny; the rejoin broadcasts).
+(chan, pol) as window aggregates: on an INS table already clustered by
+the partition keys (or a prefix of them) it needs no exchange.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from mwa_uvdata_pipeline_spark.functions.complexnum import c_abs
 from mwa_uvdata_pipeline_spark.operators.select import SpectrumType, spectrum_predicate
+
+#: the additive columns of :func:`ins_sums` (sum them to coarsen the key)
+SUM_COLS = ("mag_wsum", "nsample_sum", "n_flagged", "n_baselines")
+
+
+def ins_sums(
+    vis: DataFrame,
+    spectrum_type: SpectrumType = "cross",
+    group_keys: tuple[str, ...] = ("time_idx", "chan", "pol"),
+) -> DataFrame:
+    """Per-group sums that determine the INS: sample-weighted |V| and
+    sample weight over unflagged cells, flagged cells, all cells.
+
+    One hash aggregation; Catalyst does map-side partial aggregation so
+    the shuffle carries only Ntimes x Nchan x Npol groups regardless of
+    baseline count — this is the operator that collapses 100 TB to MBs.
+    """
+    df = vis.where(spectrum_predicate(spectrum_type))
+    ok = ~F.col("flag")
+    w = F.col("nsample")
+    return df.groupBy(*group_keys).agg(
+        F.sum(F.when(ok, c_abs(F.col("vis")) * w).otherwise(F.lit(0.0)))
+        .alias("mag_wsum"),
+        F.sum(F.when(ok, w).otherwise(F.lit(0.0))).alias("nsample_sum"),
+        F.count_if(F.col("flag")).alias("n_flagged"),
+        F.count(F.lit(1)).alias("n_baselines"),
+    )
+
+
+def ins_from_sums(sums: DataFrame) -> DataFrame:
+    """Per group: mean |V| over unflagged cells (``ins``), the summed
+    sample weight, flag occupancy and cell count. Every non-sum column
+    of ``sums`` is a group key and passes through."""
+    keys = [c for c in sums.columns if c not in SUM_COLS]
+    w = F.col("nsample_sum")
+    return sums.select(
+        *keys,
+        # NULL (not 0/0=NaN) when every contributing cell is flagged
+        F.when(w > 0, F.col("mag_wsum") / w).alias("ins"),
+        "nsample_sum",
+        (F.col("n_flagged") / F.col("n_baselines")).alias("flag_occupancy"),
+        "n_baselines",
+    )
 
 
 def incoherent_noise_spectrum(
@@ -26,25 +72,8 @@ def incoherent_noise_spectrum(
     group_keys: tuple[str, ...] = ("time_idx", "chan", "pol"),
 ) -> DataFrame:
     """Per-(time, chan, pol): mean |V| over unflagged baselines, the
-    summed sample weight, and flag occupancy.
-
-    One hash aggregation; Catalyst does map-side partial aggregation so
-    the shuffle carries only Ntimes x Nchan x Npol groups regardless of
-    baseline count — this is the operator that collapses 100 TB to MBs.
-    """
-    df = vis.where(spectrum_predicate(spectrum_type))
-    mag = c_abs(F.col("vis"))
-    ok = ~F.col("flag")
-    w = F.col("nsample")
-    wsum = F.sum(F.when(ok, w).otherwise(F.lit(0.0)))
-    return df.groupBy(*group_keys).agg(
-        # NULL (not 0/0=NaN) when every contributing cell is flagged
-        F.when(wsum > 0, F.sum(F.when(ok, mag * w).otherwise(F.lit(0.0))) / wsum)
-        .alias("ins"),
-        F.sum(F.when(ok, w).otherwise(F.lit(0.0))).alias("nsample_sum"),
-        F.avg(F.col("flag").cast("double")).alias("flag_occupancy"),
-        F.count(F.lit(1)).alias("n_baselines"),
-    )
+    summed sample weight, and flag occupancy."""
+    return ins_from_sums(ins_sums(vis, spectrum_type, group_keys))
 
 
 _MAD_TO_SIGMA = 1.4826022185056018  # 1/Phi^-1(3/4): MAD → sigma for a Gaussian
@@ -55,7 +84,6 @@ def zscore(
     value_col: str = "ins",
     part_keys: tuple[str, ...] = ("chan", "pol"),
     method: str = "mad",
-    strategy: str = "join",
 ) -> DataFrame:
     """A6: per-(chan, pol) standardization of INS across time.
 
@@ -65,59 +93,21 @@ def zscore(
     one-shot equivalent (the spike cannot drag the location/scale
     estimate). ``method="std"`` keeps the classic mean/stddev z.
     Degenerate groups (zero scale) get z=0 so thresholds stay defined.
-
-    Two physical strategies, identical results (pinned by
-    test_round9.py): ``"join"`` runs hash aggs + broadcast rejoins —
-    each stats pass is its own broadcast-build job, fine when the INS
-    table is consumed once; ``"window"`` computes the same stats as
-    window aggregates over one partitioning — ONE exchange, no
-    broadcast builds, the latency-light shape for chained pipelines
-    (the E2E lifecycle entry: 6 broadcast builds over a 5k-row table
-    cost more than the 705k-row archive scan).
     """
-    keys = list(part_keys)
-    if strategy == "window":
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(*part_keys)
-        if method == "std":
-            out = ins.withColumn("_loc", F.avg(value_col).over(w)).withColumn(
-                "_scale", F.stddev_samp(value_col).over(w)
-            )
-        else:
-            out = ins.withColumn(
-                "_loc", F.median(value_col).over(w)
-            ).withColumn(
-                "_scale",
-                F.median(F.abs(F.col(value_col) - F.col("_loc"))).over(w)
-                * F.lit(_MAD_TO_SIGMA),
-            )
-        z = F.when(
-            F.col("_scale").isNull() | (F.col("_scale") == 0.0), F.lit(0.0)
-        ).otherwise((F.col(value_col) - F.col("_loc")) / F.col("_scale"))
-        z = F.when(
-            F.col(value_col).isNull(), F.lit(None).cast("double")
-        ).otherwise(z)
-        return out.withColumn("z", z).drop("_loc", "_scale")
+    w = Window.partitionBy(*part_keys)
     if method == "std":
-        stats = ins.groupBy(*part_keys).agg(
-            F.avg(value_col).alias("_loc"),
-            F.stddev_samp(value_col).alias("_scale"),
+        out = ins.withColumn("_loc", F.avg(value_col).over(w)).withColumn(
+            "_scale", F.stddev_samp(value_col).over(w)
         )
-        joined = ins.join(F.broadcast(stats), keys, "left")
     else:
-        med = ins.groupBy(*part_keys).agg(F.median(value_col).alias("_loc"))
-        with_med = ins.join(F.broadcast(med), keys, "left")
-        mad = (
-            with_med.groupBy(*part_keys)
-            .agg(F.median(F.abs(F.col(value_col) - F.col("_loc"))).alias("_mad"))
-            .withColumn("_scale", F.col("_mad") * F.lit(_MAD_TO_SIGMA))
-            .drop("_mad")
+        out = ins.withColumn("_loc", F.median(value_col).over(w)).withColumn(
+            "_scale",
+            F.median(F.abs(F.col(value_col) - F.col("_loc"))).over(w)
+            * F.lit(_MAD_TO_SIGMA),
         )
-        joined = with_med.join(F.broadcast(mad), keys, "left")
     z = F.when(
         F.col("_scale").isNull() | (F.col("_scale") == 0.0), F.lit(0.0)
     ).otherwise((F.col(value_col) - F.col("_loc")) / F.col("_scale"))
     # fully-flagged cells have NULL ins → NULL z (flows through as "no evidence")
     z = F.when(F.col(value_col).isNull(), F.lit(None).cast("double")).otherwise(z)
-    return joined.withColumn("z", z).drop("_loc", "_scale")
+    return out.withColumn("z", z).drop("_loc", "_scale")

@@ -8,16 +8,18 @@ remove_flagged_ants=True, flag_choice=None. ``run_check`` has no
 equivalent — schema-on-read replaces pyuvdata's O(data) consistency
 scan (configurators.py:224,261).
 
-Everything here is lazy plan construction; Catalyst fuses the predicate
-stages into the scan and the whole chain runs as two shuffles (the diff
-window and the INS aggregation) regardless of how many options are on.
+``ss_read`` is lazy plan construction. ``ssins_pipeline`` runs the read
+chain up to the INS as ONE action — one scan of the input — and keeps
+the INS (Ntimes x Nchan x Npol rows) as one partition; the z-score and
+match filter above it are window aggregates that need no exchange.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
 from mwa_uvdata_pipeline_spark.operators.diff import time_diff
 from mwa_uvdata_pipeline_spark.operators.flags import (
@@ -26,7 +28,7 @@ from mwa_uvdata_pipeline_spark.operators.flags import (
     remove_coarse_band,
     seed_flags,
 )
-from mwa_uvdata_pipeline_spark.operators.ins import incoherent_noise_spectrum, zscore
+from mwa_uvdata_pipeline_spark.operators.ins import SUM_COLS, ins_from_sums, ins_sums, zscore
 from mwa_uvdata_pipeline_spark.operators.matchfilter import (
     MatchFilterConfig,
     match_filter,
@@ -66,13 +68,16 @@ def ss_read(
     opts: ReadOptions | None = None,
     select: SelectOptions | None = None,
     antenna_dim: DataFrame | None = None,
+    time_bounds: bool = True,
 ) -> DataFrame:
     """The read-time transform chain in reference order: seed flags →
-    initial flagging → corrections → select → time diff."""
+    initial flagging → corrections → select → time diff.
+    ``time_bounds=False`` leaves flag_init's first/last integrations to
+    the caller (:func:`read_ins` applies them to the INS)."""
     opts = opts or ReadOptions()
     df = seed_flags(vis, opts.flag_choice)
     if opts.flag_init:
-        df = flag_init(df, opts.fine_per_coarse, opts.edge_width)
+        df = flag_init(df, opts.fine_per_coarse, opts.edge_width, time_bounds)
     if opts.correct_van_vleck:
         df = correct_van_vleck(df, opts.van_vleck_sigma)
     if opts.remove_coarse_band:
@@ -84,15 +89,67 @@ def ss_read(
     return df
 
 
+def read_ins(
+    vis: DataFrame,
+    cfg: PipelineConfig | None = None,
+    antenna_dim: DataFrame | None = None,
+    obs_keys: tuple[str, ...] = (),
+) -> DataFrame:
+    """The read chain through the INS as ONE action over ``vis``;
+    returns the INS keyed by (*obs_keys, time_idx, chan, pol) over the
+    stored result, read as one partition.
+
+    flag_init's first/last integrations are the min/max ``time_idx`` of
+    ``vis`` itself (before select), observed by that same action and
+    applied to the INS sums: a diff is flagged iff its earlier parent is
+    the first integration or its later one the last, so the sums are
+    also keyed by the earlier parent's time, whole groups are marked
+    flagged, and the groups are summed back per time.
+    """
+    cfg = cfg or PipelineConfig()
+    opts, bounds = cfg.read, Observation()
+    keys = (*obs_keys, "time_idx", "chan", "pol")
+    if opts.flag_init:
+        vis = vis.observe(
+            bounds, F.min("time_idx").alias("lo"), F.max("time_idx").alias("hi")
+        )
+    d = ss_read(vis, opts, cfg.select, antenna_dim, time_bounds=False)
+    first = "prev_time_idx" if opts.diff else "time_idx"
+    split = (first,) if opts.flag_init and opts.diff else ()
+    sums = ins_sums(d, cfg.select.spectrum_type, (*keys, *split))
+    # the one action; the coalesce (no shuffle) makes the stored INS
+    # SinglePartition, which satisfies every later window and grouping.
+    # Its blocks belong to the returned frame: the context cleaner drops
+    # them once the frame and its descendants are garbage.
+    sums = sums.localCheckpoint(eager=True).coalesce(1)
+    if opts.flag_init:
+        lo, hi = bounds.get["lo"], bounds.get["hi"]
+        hit = (F.col(first) == F.lit(lo)) | (F.col("time_idx") == F.lit(hi))
+        flagged = {
+            "mag_wsum": F.lit(0.0),
+            "nsample_sum": F.lit(0.0),
+            "n_flagged": F.col("n_baselines"),
+        }
+        sums = sums.withColumns(
+            {c: F.when(hit, v).otherwise(F.col(c)) for c, v in flagged.items()}
+        )
+    if split:
+        sums = sums.groupBy(*keys).agg(*(F.sum(c).alias(c) for c in SUM_COLS))
+    return ins_from_sums(sums)
+
+
 def ssins_pipeline(
     vis: DataFrame,
     cfg: PipelineConfig | None = None,
     antenna_dim: DataFrame | None = None,
+    obs_keys: tuple[str, ...] = (),
 ) -> DataFrame:
     """Flagship query (SURVEY.md §7 phase 1): read-chain → INS →
     z-score → match filter. Returns the per-(time, chan, pol) flag
-    table with narrow/streak/time-broadcast verdicts."""
+    table with narrow/streak/time-broadcast verdicts (keyed by
+    ``obs_keys`` too, to flag many observations in one call). The scan
+    through the INS runs here; the returned frame is lazy above it."""
     cfg = cfg or PipelineConfig()
-    d = ss_read(vis, cfg.read, cfg.select, antenna_dim)
-    ins = incoherent_noise_spectrum(d, spectrum_type=cfg.select.spectrum_type)
-    return match_filter(zscore(ins), cfg.mf)
+    ins = read_ins(vis, cfg, antenna_dim, obs_keys)
+    z = zscore(ins, part_keys=(*obs_keys, "chan", "pol"))
+    return match_filter(z, cfg.mf, obs_keys)

@@ -23,6 +23,7 @@ from mwa_uvdata_pipeline_spark.operators.flags import flag_init
 from mwa_uvdata_pipeline_spark.operators.ins import incoherent_noise_spectrum, zscore
 from mwa_uvdata_pipeline_spark.operators.matchfilter import MatchFilterConfig, match_filter
 from mwa_uvdata_pipeline_spark.operators.select import SelectOptions, apply_select
+from mwa_uvdata_pipeline_spark.pipeline import PipelineConfig, ReadOptions, read_ins
 from mwa_uvdata_pipeline_spark.plans import register
 
 FIXTURE_DIR = Path(__file__).resolve().parents[2] / "fixtures"
@@ -1005,9 +1006,9 @@ def _e2e_oracle() -> str:
         "payload), read back through the mwa_vis Python DataSource in "
         "ONE glob scan (obsid restored from each file header), then "
         "time-differenced, INS-aggregated, z-scored and match-"
-        "filtered with obsid prefixed to every operator key — one "
-        "shuffle chain over ALL observations instead of the "
-        "reference's per-process loop. Output: per-(obsid, pol) "
+        "filtered (INS via pipeline.read_ins) with obsid prefixed "
+        "to every operator key — one scan over ALL observations "
+        "instead of the reference's per-process loop. Output: per-(obsid, pol) "
         "narrow/streak/tb/mf counts and exact-integer occupancy ppm; "
         "obsid 1 shows the injected burst, obsids 0/2 stay clean. "
         "The DuckDB twin regenerates the identical cube relationally "
@@ -1015,7 +1016,8 @@ def _e2e_oracle() -> str:
         "sides). Scale: grid dims derive from the sf (footer-count "
         "branch, identical in both engines); the archive is the only "
         "corpus-scale object, INS collapses it to Ntimes×Nchan×Npol "
-        "per obsid, and everything after is broadcast-size.",
+        "per obsid, and everything after runs on that materialised "
+        "table without an exchange.",
 )
 def d_e2e_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
@@ -1044,40 +1046,15 @@ def d_e2e_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("path", f"{out}/obs*/part-*.mwab")
         .load()
     )
-    d = time_diff(vis)  # keys: (obsid, ant1, ant2, chan, pol)
-    ins = (
-        incoherent_noise_spectrum(
-            d, spectrum_type="cross",
-            group_keys=("obsid", "time_idx", "chan", "pol"),
-        )
-        .withColumn("ins", F.round("ins", 9))
-        # INS is the collapse point (Ntimes x Nchan x Npol x Nobs rows
-        # — MBs from 100 TB); persist it so the z-score/match-filter
-        # self-joins re-read THIS table, not the binary archive scan
-        # (without it the Python-DataSource read + diff re-executes
-        # ~5x: med, mad, streak, tb, and the final agg)
-        .persist()
+    # the reference run without flag_init: file flags kept, diff on,
+    # cross spectrum; the INS is computed once and read as one partition
+    cfg = PipelineConfig(
+        read=ReadOptions(flag_init=False, flag_choice="original"),
+        select=SelectOptions(spectrum_type="cross"),
     )
-    # hash the cached INS on obsid alone: every post-INS requirement —
-    # the zscore windows (obsid, chan, pol), the streak window
-    # (obsid, time_idx, pol), the tb window (obsid, time_idx) and the
-    # final (obsid, pol) aggregate — is ClusteredDistribution on an
-    # obsid-prefixed key, and HashPartitioning(obsid) satisfies them
-    # ALL (subset rule), so the whole match-filter chain runs on ONE
-    # tiny exchange instead of four sequential ones. The repartition
-    # sits ABOVE the cache because an AQE-planned InMemoryRelation
-    # hides its output partitioning from consumers (EnsureRequirements
-    # would re-shuffle anyway). obsid is also the 100 TB scale-out
-    # unit (observations are independent), so the shape is not a
-    # local[32] trick.
-    z = zscore(
-        ins.repartition("obsid"),
-        part_keys=("obsid", "chan", "pol"),
-        strategy="window",
-    )
-    mf = match_filter(
-        z, MatchFilterConfig(), obs_keys=("obsid",), strategy="window"
-    )
+    ins = read_ins(vis, cfg, obs_keys=("obsid",)).withColumn("ins", F.round("ins", 9))
+    z = zscore(ins, part_keys=("obsid", "chan", "pol"))
+    mf = match_filter(z, MatchFilterConfig(), obs_keys=("obsid",))
     return mf.groupBy("obsid", "pol").agg(
         F.count(F.lit(1)).cast("long").alias("n_cells"),
         F.sum(F.col("narrow_flag").cast("int")).cast("long").alias("n_narrow"),

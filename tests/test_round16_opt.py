@@ -213,21 +213,18 @@ def test_lazy_synth_frame_falls_back_for_generic_use(spark):
     assert bytes(head.payload[:2]) == b"P6"
 
 
-def test_e2e_match_filter_chain_single_post_ins_exchange(spark):
+def test_e2e_match_filter_chain_no_post_ins_exchange(spark):
     """d_e2e_lifecycle's post-INS chain (zscore windows, streak, tb,
-    final agg) must ride ONE obsid repartition: HashPartitioning(obsid)
-    satisfies every downstream obsid-prefixed clustering, so the only
-    exchanges in the whole plan are the diff shuffle, the INS partial
-    agg, and that single repartition."""
+    final agg) must run on the materialised INS without ANY exchange:
+    the INS is read as one partition, and SinglePartition satisfies
+    every downstream obsid-prefixed clustering. The scan, diff shuffle
+    and INS aggregation ran once, when the INS was materialised."""
     from mwa_uvdata_pipeline_spark.plans import load_all
 
     df = load_all()["d_e2e_lifecycle"].spark(spark, SF_SMALL)
     plan = _executed_plan(df)
-    n_exchange = sum(
-        1 for ln in plan.splitlines() if "Exchange hashpartitioning" in ln
-    )
-    assert n_exchange == 3, plan
-    assert plan.count("REPARTITION_BY_COL") == 1
+    assert "Scan ExistingRDD" in plan, plan
+    assert "Exchange" not in plan, plan
 
 
 def test_assoc_rules_single_fact_scan(spark):
