@@ -11,8 +11,9 @@ Pipeline over the z-scored INS table:
 
 Every statistic is a window aggregate over the tiny INS table
 (Ntimes x Nchan x Npol rows): the heavy lifting happened upstream in
-the INS aggregation, and on an INS table held in one partition the
-whole filter runs without an exchange.
+the INS aggregation, and on an INS table held in one partition, or
+hash-partitioned on ``obs_keys``, the whole filter runs without an
+exchange.
 """
 
 from __future__ import annotations

@@ -97,17 +97,31 @@ def read_ins(
 ) -> DataFrame:
     """The read chain through the INS as ONE action over ``vis``;
     returns the INS keyed by (*obs_keys, time_idx, chan, pol) over the
-    stored result, read as one partition.
+    stored result. Without ``obs_keys`` it is read as one partition;
+    with them it is hash-partitioned on them by one exchange of the INS
+    rows, so observations run in parallel. Either way every later
+    window or grouping prefixed by ``obs_keys`` needs no further
+    exchange.
 
     flag_init's first/last integrations are the min/max ``time_idx`` of
     ``vis`` itself (before select), observed by that same action and
     applied to the INS sums: a diff is flagged iff its earlier parent is
     the first integration or its later one the last, so the sums are
     also keyed by the earlier parent's time, whole groups are marked
-    flagged, and the groups are summed back per time.
+    flagged, and the groups are summed back per time. Those bounds span
+    the whole frame, so flag_init is refused with ``obs_keys``.
+
+    The INS is stored by ``localCheckpoint``: its blocks belong to the
+    returned frame and Spark's context cleaner drops them once the frame
+    and its descendants are garbage. The price is fault tolerance: the
+    stored blocks have no lineage, so if an executor holding them is
+    lost, the frame fails rather than recomputes and the caller must
+    call ``read_ins`` again.
     """
     cfg = cfg or PipelineConfig()
     opts, bounds = cfg.read, Observation()
+    if obs_keys and opts.flag_init:
+        raise ValueError("flag_init bounds are per frame; they cannot be used with obs_keys")
     keys = (*obs_keys, "time_idx", "chan", "pol")
     if opts.flag_init:
         vis = vis.observe(
@@ -117,11 +131,11 @@ def read_ins(
     first = "prev_time_idx" if opts.diff else "time_idx"
     split = (first,) if opts.flag_init and opts.diff else ()
     sums = ins_sums(d, cfg.select.spectrum_type, (*keys, *split))
-    # the one action; the coalesce (no shuffle) makes the stored INS
-    # SinglePartition, which satisfies every later window and grouping.
-    # Its blocks belong to the returned frame: the context cleaner drops
-    # them once the frame and its descendants are garbage.
-    sums = sums.localCheckpoint(eager=True).coalesce(1)
+    # the one action. A checkpoint planned by AQE reports no output
+    # partitioning, so the distribution is set above it: a coalesce
+    # (no shuffle) to SinglePartition, or a hash exchange on obs_keys.
+    sums = sums.localCheckpoint(eager=True)
+    sums = sums.repartition(*obs_keys) if obs_keys else sums.coalesce(1)
     if opts.flag_init:
         lo, hi = bounds.get["lo"], bounds.get["hi"]
         hit = (F.col(first) == F.lit(lo)) | (F.col("time_idx") == F.lit(hi))
@@ -142,14 +156,13 @@ def ssins_pipeline(
     vis: DataFrame,
     cfg: PipelineConfig | None = None,
     antenna_dim: DataFrame | None = None,
-    obs_keys: tuple[str, ...] = (),
 ) -> DataFrame:
     """Flagship query (SURVEY.md §7 phase 1): read-chain → INS →
-    z-score → match filter. Returns the per-(time, chan, pol) flag
-    table with narrow/streak/time-broadcast verdicts (keyed by
-    ``obs_keys`` too, to flag many observations in one call). The scan
-    through the INS runs here; the returned frame is lazy above it."""
+    z-score → match filter over one observation. Returns the
+    per-(time, chan, pol) flag table with narrow/streak/time-broadcast
+    verdicts. The scan through the INS runs here; the returned frame is
+    lazy above it."""
     cfg = cfg or PipelineConfig()
-    ins = read_ins(vis, cfg, antenna_dim, obs_keys)
-    z = zscore(ins, part_keys=(*obs_keys, "chan", "pol"))
-    return match_filter(z, cfg.mf, obs_keys)
+    ins = read_ins(vis, cfg, antenna_dim)
+    z = zscore(ins, part_keys=("chan", "pol"))
+    return match_filter(z, cfg.mf)

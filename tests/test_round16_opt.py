@@ -213,18 +213,22 @@ def test_lazy_synth_frame_falls_back_for_generic_use(spark):
     assert bytes(head.payload[:2]) == b"P6"
 
 
-def test_e2e_match_filter_chain_no_post_ins_exchange(spark):
+def test_e2e_match_filter_chain_single_post_ins_exchange(spark):
     """d_e2e_lifecycle's post-INS chain (zscore windows, streak, tb,
-    final agg) must run on the materialised INS without ANY exchange:
-    the INS is read as one partition, and SinglePartition satisfies
-    every downstream obsid-prefixed clustering. The scan, diff shuffle
-    and INS aggregation ran once, when the INS was materialised."""
+    final agg) must ride ONE obsid repartition of the materialised INS:
+    HashPartitioning(obsid) satisfies every downstream obsid-prefixed
+    clustering, and obsid is the scale-out unit. The scan, diff shuffle
+    and INS aggregation ran once, when the INS was materialised, so the
+    plan holds no other exchange."""
     from mwa_uvdata_pipeline_spark.plans import load_all
 
     df = load_all()["d_e2e_lifecycle"].spark(spark, SF_SMALL)
     plan = _executed_plan(df)
+    exchanges = [ln.strip() for ln in plan.splitlines() if "Exchange" in ln]
+    assert len(exchanges) == 1, plan
+    assert exchanges[0].startswith("+- Exchange hashpartitioning(obsid#"), plan
+    assert "REPARTITION_BY_COL" in exchanges[0], plan
     assert "Scan ExistingRDD" in plan, plan
-    assert "Exchange" not in plan, plan
 
 
 def test_assoc_rules_single_fact_scan(spark):

@@ -3,8 +3,9 @@
 The flag counts are checked exactly against an independent numpy SSINS
 at reference defaults (flag_init on, diff on), with a time_limit select
 and without the diff; the plan above the materialised INS must need no
-exchange; and repeated requests must leave no stored blocks behind in
-the session.
+exchange; many observations through ``read_ins`` must flag as each one
+alone; and repeated requests must leave no stored blocks behind in the
+session.
 """
 
 from __future__ import annotations
@@ -18,8 +19,15 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from mwa_uvdata_pipeline_spark.pipeline import PipelineConfig, ReadOptions, ssins_pipeline
+from mwa_uvdata_pipeline_spark.operators.ins import zscore
+from mwa_uvdata_pipeline_spark.operators.matchfilter import match_filter
 from mwa_uvdata_pipeline_spark.operators.select import SelectOptions
+from mwa_uvdata_pipeline_spark.pipeline import (
+    PipelineConfig,
+    ReadOptions,
+    read_ins,
+    ssins_pipeline,
+)
 
 T, ANTS, C = 14, 5, 16
 POLS = ("xx", "yy")
@@ -160,6 +168,24 @@ def test_post_ins_chain_needs_no_exchange(obs):
     plan = _report(ssins_pipeline(obs))._jdf.queryExecution().executedPlan().toString()
     assert "Scan ExistingRDD" in plan, plan
     assert "Exchange" not in plan, plan
+
+
+def test_read_ins_by_observation_matches_each_alone(obs):
+    # two observations with different time ranges, flagged in
+    # one chain keyed by obsid, must each flag as they do alone
+    cfg = PipelineConfig(read=ReadOptions(flag_init=False))
+    other = obs.where(F.col("time_idx") >= 3).withColumn("obsid", F.lit(2_000_000_000))
+    ins = read_ins(obs.unionByName(other), cfg, obs_keys=("obsid",))
+    mf = match_filter(zscore(ins, part_keys=("obsid", "chan", "pol")), cfg.mf, ("obsid",))
+    for obsid, one in ((1_000_000_000, obs), (2_000_000_000, other)):
+        alone = _counts(ssins_pipeline(one, cfg))
+        assert all(alone[p][1] > 0 for p in POLS), alone
+        assert _counts(mf.where(F.col("obsid") == obsid)) == alone
+
+
+def test_read_ins_refuses_frame_bounds_by_observation(obs):
+    with pytest.raises(ValueError, match="obs_keys"):
+        read_ins(obs, PipelineConfig(), obs_keys=("obsid",))
 
 
 class _WarnLog:
