@@ -10,10 +10,12 @@ it promises). Usage:
     python -m mwa_uvdata_pipeline_spark ingest <file>... [--summary]
 
 ``ingest`` reads visibility files through the multi-format registry
-(fits/metafits/uvfits/uvf/gpubox/uvh5/mwab/parquet dispatch by
-extension — the reference's read loop, processors.py:47-76, as one
-registry call) and prints rows, or a per-(chan, pol) summary with
-``--summary``.
+(``sources.READERS``: parquet, uvfits/uvf, gpubox ``.fits``, metafits
+and uvh5, dispatched by extension — the reference's read loop,
+processors.py:47-76, as one registry call) and prints rows, or a
+per-(chan, pol) summary with ``--summary``. MWAB archives are not
+ingest files: they are read through the ``mwa_vis`` Spark data source
+(``mwab.register_mwa_source``).
 
 ``run`` prints the result as tab-separated rows (the reference's TSV
 convention); ``--explain`` prints the formatted physical plan instead

@@ -47,6 +47,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from mwa_uvdata_pipeline_spark.codec import cell_index, cube_rows
+
 MAGIC = b"MWAB1\n"
 
 SCHEMA = (
@@ -257,17 +259,12 @@ class MWABReader(DataSourceReader):
         n = nsel * BL * csel * P
 
         time0 = header.get("time0", 0)
-        time_idx = np.repeat(
-            np.arange(part.t0, part.t1, dtype=np.int32), BL * csel * P
-        )
-        a1 = np.asarray([b[0] for b in bls], dtype=np.int32)
-        a2 = np.asarray([b[1] for b in bls], dtype=np.int32)
-        ant1 = np.tile(np.repeat(a1, csel * P), nsel)
-        ant2 = np.tile(np.repeat(a2, csel * P), nsel)
-        chan = np.tile(
-            np.repeat(np.arange(c0, c1 + 1, dtype=np.int32), P), nsel * BL
-        )
-        pol = np.tile(np.asarray(pols, dtype=object), n // P)
+        t, b, c, p = cube_rows((nsel, BL, csel, P))
+        time_idx = (t + part.t0).astype(np.int32)
+        bl = np.asarray(bls, dtype=np.int32)
+        ant1, ant2 = bl[b, 0], bl[b, 1]
+        chan = (c + c0).astype(np.int32)
+        pol = np.asarray(pols, dtype=object)[p]
 
         batch = pa.RecordBatch.from_arrays(
             [
@@ -499,24 +496,20 @@ def _pack_dense(
     [time0, time0 + len(times_jd)) into one dense (T, BL, C, P) MWAB
     file. Shared by the driver-side fixture helper and the
     executor-side distributed packer."""
-    bls = baselines_of(ants)
-    bl_index = {b: i for i, b in enumerate(bls)}
-    pol_index = {p: i for i, p in enumerate(pols)}
-    T, BL, C, P = len(times_jd), len(bls), n_chans, len(pols)
+    a1, a2 = np.asarray(baselines_of(ants)).reshape(-1, 2).T
+    T, BL, C, P = len(times_jd), len(a1), n_chans, len(pols)
+    cell = (
+        cell_index(np.arange(time0, time0 + T), pdf["time_idx"], "time"),
+        cell_index((a1, a2), (pdf["ant1"], pdf["ant2"]), "baseline"),
+        cell_index(np.arange(C), pdf["chan"], "channel"),
+        cell_index(np.asarray(pols), pdf["pol"], "polarisation"),
+    )
     re = np.zeros((T, BL, C, P))
     im = np.zeros((T, BL, C, P))
     fl = np.zeros((T, BL, C, P), dtype="u1")
-    b_idx = np.fromiter(
-        (bl_index[(a1, a2)] for a1, a2 in zip(pdf["ant1"], pdf["ant2"])),
-        dtype=np.int64,
-        count=len(pdf),
-    )
-    p_idx = pdf["pol"].map(pol_index).to_numpy()
-    t_idx = pdf["time_idx"].to_numpy() - time0
-    c_idx = pdf["chan"].to_numpy()
-    re[t_idx, b_idx, c_idx, p_idx] = [v["re"] for v in pdf["vis"]]
-    im[t_idx, b_idx, c_idx, p_idx] = [v["im"] for v in pdf["vis"]]
-    fl[t_idx, b_idx, c_idx, p_idx] = pdf["flag"].to_numpy().astype("u1")
+    re[cell] = [v["re"] for v in pdf["vis"]]
+    im[cell] = [v["im"] for v in pdf["vis"]]
+    fl[cell] = pdf["flag"].to_numpy().astype("u1")
     header = {
         "obsid": int(obsid),
         "ants": [int(a) for a in ants],

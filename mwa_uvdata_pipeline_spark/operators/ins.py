@@ -81,33 +81,25 @@ _MAD_TO_SIGMA = 1.4826022185056018  # 1/Phi^-1(3/4): MAD → sigma for a Gaussia
 
 def zscore(
     ins: DataFrame,
-    value_col: str = "ins",
     part_keys: tuple[str, ...] = ("chan", "pol"),
-    method: str = "mad",
 ) -> DataFrame:
     """A6: per-(chan, pol) standardization of INS across time.
 
-    Default is the robust median/MAD estimator: SSINS applies its match
-    filter iteratively precisely because a bright RFI spike contaminates
-    the plain mean/stddev of its own channel; median/MAD gives the
-    one-shot equivalent (the spike cannot drag the location/scale
-    estimate). ``method="std"`` keeps the classic mean/stddev z.
+    The robust median/MAD estimator: SSINS applies its match filter
+    iteratively precisely because a bright RFI spike contaminates the
+    plain mean/stddev of its own channel; median/MAD gives the one-shot
+    equivalent (the spike cannot drag the location/scale estimate).
     Degenerate groups (zero scale) get z=0 so thresholds stay defined.
     """
     w = Window.partitionBy(*part_keys)
-    if method == "std":
-        out = ins.withColumn("_loc", F.avg(value_col).over(w)).withColumn(
-            "_scale", F.stddev_samp(value_col).over(w)
-        )
-    else:
-        out = ins.withColumn("_loc", F.median(value_col).over(w)).withColumn(
-            "_scale",
-            F.median(F.abs(F.col(value_col) - F.col("_loc"))).over(w)
-            * F.lit(_MAD_TO_SIGMA),
-        )
+    out = ins.withColumn("_loc", F.median("ins").over(w)).withColumn(
+        "_scale",
+        F.median(F.abs(F.col("ins") - F.col("_loc"))).over(w)
+        * F.lit(_MAD_TO_SIGMA),
+    )
     z = F.when(
         F.col("_scale").isNull() | (F.col("_scale") == 0.0), F.lit(0.0)
-    ).otherwise((F.col(value_col) - F.col("_loc")) / F.col("_scale"))
+    ).otherwise((F.col("ins") - F.col("_loc")) / F.col("_scale"))
     # fully-flagged cells have NULL ins → NULL z (flows through as "no evidence")
-    z = F.when(F.col(value_col).isNull(), F.lit(None).cast("double")).otherwise(z)
+    z = F.when(F.col("ins").isNull(), F.lit(None).cast("double")).otherwise(z)
     return out.withColumn("z", z).drop("_loc", "_scale")

@@ -5,15 +5,26 @@ S7: the reference exposes ``export_tsv`` for INS output
 writer. S8's three plot types are served as queryable result tables
 (plans.domain), not rendered images.
 
-Scale posture: both writers are executor-parallel (one file per
-partition); ``write_hypercube`` lays visibility data out partitioned by
-the keys every downstream operator groups on, so scans prune partitions
-and the diff/INS shuffles start co-located.
+Scale posture: every writer is executor-parallel. The TSV, bucketed
+and parquet writers write one file per partition; ``write_hypercube``
+lays visibility data out partitioned by the keys every downstream
+operator groups on, so scans prune partitions and the diff/INS
+shuffles start co-located. The native exports (uvfits, uvh5) share one
+grouped-export body that writes one file per observation inside one
+task each.
 """
 
 from __future__ import annotations
 
+import os
+from collections.abc import Callable
+from functools import partial
+
+import pandas as pd
 from pyspark.sql import DataFrame
+
+from mwa_uvdata_pipeline_spark.sources_fits import write_uvfits
+from mwa_uvdata_pipeline_spark.sources_hdf5 import write_uvh5
 
 
 def write_tsv(df: DataFrame, path: str, single_file: bool = False) -> None:
@@ -124,35 +135,28 @@ def compact_parquet(
     }
 
 
-def write_uvfits_grouped(
+def _write_grouped(
     vis: DataFrame,
     out_dir: str,
-    group_col: str = "obsid",
-    jd_zero: float = 2460000.0,
+    group_col: str,
+    ext: str,
+    write: Callable[[pd.DataFrame, str], None],
 ) -> DataFrame:
-    """Distributed uvfits EXPORT — the write half of the native FITS
-    story (sources_fits.py reads): one random-groups uvfits file per
-    ``group_col`` value, written executor-side via applyInPandas, so a
-    100-TB export parallelizes one task per observation with no
-    driver-side data movement. Returns the manifest (group, path,
-    rows, bytes) as a DataFrame — the only thing the driver sees.
+    """One native file per ``group_col`` value, packed and written
+    executor-side via applyInPandas, so an export parallelizes one task
+    per observation with no driver-side data movement. Returns the
+    manifest (group, path, n_rows, n_bytes) as a DataFrame — the only
+    thing the driver sees.
 
     Files land on a filesystem visible to the executors (local/NFS
     here; on an object store the per-task write becomes an upload from
     the same generator — the grouping and memory shape are unchanged,
-    one observation per task).
-    """
-    import os
-
-    import pandas as pd
-
+    one observation per task)."""
     os.makedirs(out_dir, exist_ok=True)
 
-    def write_group(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
-        from mwa_uvdata_pipeline_spark.sources_fits import write_uvfits
-
-        path = os.path.join(out_dir, f"obs_{key[0]}.uvfits")
-        write_uvfits(pdf, path, jd_zero=jd_zero)
+    def write_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        path = os.path.join(out_dir, f"obs_{key[0]}.{ext}")
+        write(pdf, path)
         return pd.DataFrame(
             [
                 {
@@ -167,6 +171,20 @@ def write_uvfits_grouped(
     return vis.groupBy(group_col).applyInPandas(
         write_group,
         "group long, path string, n_rows long, n_bytes long",
+    )
+
+
+def write_uvfits_grouped(
+    vis: DataFrame,
+    out_dir: str,
+    group_col: str = "obsid",
+    jd_zero: float = 2460000.0,
+) -> DataFrame:
+    """Distributed uvfits EXPORT — the write half of the native FITS
+    story (sources_fits.py reads): one random-groups uvfits file per
+    ``group_col`` value (see :func:`_write_grouped`)."""
+    return _write_grouped(
+        vis, out_dir, group_col, "uvfits", partial(write_uvfits, jd_zero=jd_zero)
     )
 
 
@@ -177,32 +195,5 @@ def write_uvh5_grouped(
 ) -> DataFrame:
     """Distributed UVH5 EXPORT — the write half of the native HDF5
     story (sources_hdf5.py reads): one UVH5 file per ``group_col``
-    value, packed and written executor-side via applyInPandas, one
-    observation per task, driver sees only the manifest. Same
-    contract as :func:`write_uvfits_grouped`."""
-    import os
-
-    import pandas as pd
-
-    os.makedirs(out_dir, exist_ok=True)
-
-    def write_group(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
-        from mwa_uvdata_pipeline_spark.sources_hdf5 import write_uvh5
-
-        path = os.path.join(out_dir, f"obs_{key[0]}.uvh5")
-        write_uvh5(pdf, path)
-        return pd.DataFrame(
-            [
-                {
-                    "group": key[0],
-                    "path": path,
-                    "n_rows": len(pdf),
-                    "n_bytes": os.path.getsize(path),
-                }
-            ]
-        )
-
-    return vis.groupBy(group_col).applyInPandas(
-        write_group,
-        "group long, path string, n_rows long, n_bytes long",
-    )
+    value (see :func:`_write_grouped`)."""
+    return _write_grouped(vis, out_dir, group_col, "uvh5", write_uvh5)

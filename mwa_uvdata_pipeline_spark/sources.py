@@ -1,4 +1,5 @@
-"""Source dispatch and reader registry (SURVEY.md §2.1 S1/S2, §2.11).
+"""Source dispatch: one registry from file format to reader
+(SURVEY.md §2.1 S1/S2, §2.11).
 
 The reference models inputs as a typed file set with per-format
 processors: ``supported_types`` {fits, metafits, ms, uvfits, uvf, uvh5}
@@ -7,16 +8,18 @@ processors: ``supported_types`` {fits, metafits, ms, uvfits, uvf, uvh5}
 ``read`` (reference processors.py:42-63), and a ``DEFAULT_READERS``
 registry filled by a decorator (reference processors.py:23-38).
 
-Here the registry maps format → reader callable returning the
-long-format visibility DataFrame (SURVEY.md §1.4). Parquet is the
-production path; ``uvfits`` and ``metafits`` are NATIVE readers
-(sources_fits.py — FITS parsed from the standard, no astropy) built
-exactly as the scale design prescribes: ``binaryFile`` scan +
-Arrow-batched per-file converter, one executor task per file. The
-``uvh5`` is NATIVE too (sources_hdf5.py — a minimal HDF5 v0 codec
-written to the public file-format spec, no h5py). Only ``ms`` remains
-an import-gated stub: the casacore table container has no public
-byte-level spec concise enough to reimplement safely.
+Here :data:`READERS` maps each format to a reader returning the
+long-format visibility DataFrame (SURVEY.md §1.4):
+
+- ``parquet`` is the production path, Spark's own scan;
+- the native formats are each a parser of one file's bytes and the
+  schema of its rows, read by the one file scan
+  :func:`codec.scan_files`: ``uvfits`` and the gpubox ``fits`` dump
+  (sources_fits.py, FITS parsed from the standard, no astropy),
+  ``metafits`` headers (one row per observation), and ``uvh5``
+  (sources_hdf5.py, a minimal HDF5 v0 codec, no h5py);
+- ``ms`` is a stub: the casacore table container has no public
+  byte-level spec concise enough to reimplement safely.
 
 X8 batch arithmetic (reference utils.py:20-47) is kept as advisory
 planning math — Spark's executor memory model (partitioning + spill +
@@ -26,13 +29,20 @@ AQE) replaces it, so its only use is suggesting a repartition width.
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import partial
 from pathlib import PurePosixPath
 
 from pyspark.sql import DataFrame, SparkSession
 
-SUPPORTED_TYPES = frozenset(
-    {"fits", "metafits", "ms", "uvfits", "uvf", "uvh5", "parquet"}
+from mwa_uvdata_pipeline_spark.codec import scan_files
+from mwa_uvdata_pipeline_spark.sources_fits import (
+    GPUBOX_SCHEMA,
+    UVFITS_SCHEMA,
+    parse_gpubox,
+    parse_uvfits,
+    read_metafits,
 )
+from mwa_uvdata_pipeline_spark.sources_hdf5 import parse_uvh5
 
 # uvf is an alias of uvfits (reference configurators.py:47; the
 # reference's alias TODO — SURVEY.md §8.6 — is resolved here so alias
@@ -41,18 +51,37 @@ ALIASES = {"uvf": "uvfits"}
 
 Reader = Callable[[SparkSession, list[str]], DataFrame]
 
-READERS: dict[str, Reader] = {}
+
+def read_parquet_vis(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """Long-format hypercube from parquet — the production path. Spark
+    lists/splits files on executors; predicate pushdown and partition
+    pruning come from the scan itself."""
+    return spark.read.parquet(*paths)
 
 
-def register_reader(fmt: str):
-    """Decorator filling the format registry (the Spark analog of the
-    reference's ``@default_reader``, processors.py:23-38)."""
+def read_ms(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """casacore MeasurementSet stub: the scale design is the native one,
+    a per-file converter under :func:`codec.scan_files`."""
+    try:
+        import casacore  # noqa: F401
+    except ImportError:
+        raise NotImplementedError(
+            "ms ingest needs ['casacore']; the scale design is a "
+            "binaryFile scan + mapInPandas per-file converter to the "
+            "long-format schema (SURVEY.md §4)"
+        ) from None
+    raise NotImplementedError("wire the ms converter here")
 
-    def wrap(fn: Reader) -> Reader:
-        READERS[ALIASES.get(fmt, fmt)] = fn
-        return fn
 
-    return wrap
+READERS: dict[str, Reader] = {
+    "parquet": read_parquet_vis,
+    "ms": read_ms,
+    "metafits": read_metafits,
+    "fits": partial(scan_files, parse=parse_gpubox, schema=GPUBOX_SCHEMA),
+    "uvfits": partial(scan_files, parse=parse_uvfits, schema=UVFITS_SCHEMA),
+    # uvh5 rows share the uvfits schema
+    "uvh5": partial(scan_files, parse=parse_uvh5, schema=UVFITS_SCHEMA),
+}
 
 
 def format_of(path: str) -> str:
@@ -82,84 +111,6 @@ def read_visibilities(spark: SparkSession, paths: list[str]) -> DataFrame:
         out = df if out is None else out.unionByName(df)
     assert out is not None, "no input paths"
     return out
-
-
-@register_reader("parquet")
-def read_parquet_vis(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """Long-format hypercube from parquet — the production path. Spark
-    lists/splits files on executors; predicate pushdown and partition
-    pruning come from the scan itself."""
-    return spark.read.parquet(*paths)
-
-
-def _stub_reader(fmt: str, libs: tuple[str, ...]) -> Reader:
-    def read_stub(spark: SparkSession, paths: list[str]) -> DataFrame:
-        missing = []
-        for lib in libs:
-            try:
-                __import__(lib)
-            except ImportError:
-                missing.append(lib)
-        if missing:
-            raise NotImplementedError(
-                f"{fmt} ingest needs {missing}; the scale design is a "
-                "binaryFile scan + mapInPandas per-file converter to the "
-                "long-format schema (SURVEY.md §4)"
-            )
-        raise NotImplementedError(f"wire the {fmt} converter here")
-
-    return read_stub
-
-
-for _fmt, _libs in {
-    "ms": ("casacore",),
-}.items():
-    register_reader(_fmt)(_stub_reader(_fmt, _libs))
-
-
-@register_reader("uvh5")
-def read_uvh5_vis(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """NATIVE UVH5 reader (sources_hdf5.py — HDF5 v0 container parsed
-    from the file-format spec, no h5py): /Header axes + /Data cubes
-    with the compound (r, i) complex convention; binaryFile +
-    mapInPandas, one executor task per file."""
-    from mwa_uvdata_pipeline_spark.sources_hdf5 import read_uvh5
-
-    return read_uvh5(spark, paths)
-
-
-@register_reader("fits")
-def read_gpubox_vis(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """NATIVE raw-correlator FITS reader (sources_fits.py — no
-    astropy/mwalib): multi-HDU image extensions, one integration per
-    HDU, BSCALE/BZERO scaled-int payloads, triangular baseline
-    ordering; binaryFile + per-file numpy parse, one task per gpubox
-    file exactly as MWA splits them per coarse channel."""
-    from mwa_uvdata_pipeline_spark.sources_fits import read_gpubox
-
-    return read_gpubox(spark, paths)
-
-
-@register_reader("uvfits")
-def read_uvfits_vis(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """NATIVE random-groups uvfits reader (sources_fits.py — no
-    astropy): binaryFile listing + per-file numpy parse in mapInPandas,
-    one executor task per file. Replaces the reference's pyuvdata
-    delegation (reference processors.py:154-198) with a parser for the
-    FITS-standard subset interferometer files use."""
-    from mwa_uvdata_pipeline_spark.sources_fits import read_uvfits
-
-    return read_uvfits(spark, paths)
-
-
-@register_reader("metafits")
-def read_metafits_meta(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """NATIVE metafits header reader (sources_fits.py): S3
-    metadata-only scan, one typed row per observation plus the full
-    card map."""
-    from mwa_uvdata_pipeline_spark.sources_fits import read_metafits
-
-    return read_metafits(spark, paths)
 
 
 def compute_optimal_batches(

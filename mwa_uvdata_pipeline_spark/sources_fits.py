@@ -22,28 +22,32 @@ readers in this container rather than astropy-gated stubs:
   fastest). Flags ride the weight sign (negative = flagged), the
   AIPS/uvfits convention.
 
-Scale design: `spark.read.format("binaryFile")` lists and distributes
-the files across executors; `mapInPandas` runs the numpy parse per
-file and emits the long-format visibility schema (SURVEY.md §1.4) —
-one task per file, linear in file count, no driver-side loop. MWA
-splits an observation into per-coarse-channel files, so per-task
-memory is one coarse channel, the same unit the reference's batching
-arithmetic targets. The writer is a driver-side fixture/test tool
-(small files); a distributed writer would be a foreachPartition sink.
+Both formats keep their byte layout and axis order here; the
+polarisation table, the row-to-cell indexer the writers scatter with,
+the cell-to-row explosion the parsers gather with, and the Spark file
+scan that runs ``parse_*`` once per file are shared with the other
+codecs (:mod:`codec`). MWA splits an observation into
+per-coarse-channel files, so per-task memory is one coarse channel,
+the same unit the reference's batching arithmetic targets. The writers
+are driver-side fixture/test tools (small files); the distributed
+export is :func:`sinks.write_uvfits_grouped`.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+
+from mwa_uvdata_pipeline_spark.codec import (
+    POL_NAME,
+    cell_index,
+    cube_rows,
+    pol_axis,
+    scan_files,
+)
 
 BLOCK = 2880
 CARD = 80
-
-#: AIPS stokes codes for linear polarizations (negative per convention)
-POL_CODES = {-5: "XX", -6: "YY", -7: "XY", -8: "YX"}
-POL_NAMES = {v: k for k, v in POL_CODES.items()}
 
 
 def _string_end(s: str, start: int) -> int:
@@ -165,16 +169,22 @@ def write_uvfits(pdf: pd.DataFrame, path: str, jd_zero: float) -> None:
     times = np.sort(pdf["time_jd"].unique())
     chans = np.sort(pdf["chan"].unique())
     freqs = np.sort(pdf["freq_hz"].unique())
-    pols = sorted(pdf["pol"].unique(), key=lambda p: -POL_NAMES[p])
-    bls = sorted(set(zip(pdf["ant1"], pdf["ant2"])))
-    nt, nc, npol, nbl = len(times), len(chans), len(pols), len(bls)
-    # Explicit raises (not assert — stripped under python -O): a gapped
-    # channel selection would otherwise IndexError or silently scatter
-    # values into wrong cube slots via the chan - chans[0] offset.
+    pols, pi = pol_axis(pdf["pol"])
+    bls = pdf[["ant1", "ant2"]].drop_duplicates().sort_values(["ant1", "ant2"])
+    a1, a2 = bls["ant1"].to_numpy(), bls["ant2"].to_numpy()
+    nt, nc, npol, nbl = len(times), len(chans), len(pols), len(a1)
+    # Explicit raises (not assert — stripped under python -O): the FREQ
+    # and STOKES axes are stored as a start and a step, so a gapped
+    # channel selection or polarisation set has no uvfits encoding.
     if not np.array_equal(chans, np.arange(chans[0], chans[0] + nc)):
         raise ValueError(
             f"uvfits writer requires a dense contiguous channel grid; "
             f"got gapped selection {chans.tolist()[:8]}..."
+        )
+    if (np.diff(pols) != -1).any():
+        raise ValueError(
+            "uvfits writer requires consecutive polarisation codes; got "
+            f"{[POL_NAME[c] for c in pols]}"
         )
     if len(freqs) != nc:
         raise ValueError(
@@ -188,24 +198,16 @@ def write_uvfits(pdf: pd.DataFrame, path: str, jd_zero: float) -> None:
     else:
         cdelt = 1.0
 
-    t_ix = {t: i for i, t in enumerate(times)}
-    b_ix = {b: i for i, b in enumerate(bls)}
-    p_ix = {p: i for i, p in enumerate(pols)}
-
+    ti = cell_index(times, pdf["time_jd"], "time")
+    bi = cell_index((a1, a2), (pdf["ant1"], pdf["ant2"]), "baseline")
+    ci = cell_index(chans, pdf["chan"], "channel")
     data = np.zeros((nt, nbl, nc, npol, 3), dtype=">f4")
-    rows = pdf
-    gi = (
-        rows["time_jd"].map(t_ix).to_numpy(),
-        rows[["ant1", "ant2"]].apply(tuple, axis=1).map(b_ix).to_numpy(),
-        rows["chan"].to_numpy() - chans[0],
-        rows["pol"].map(p_ix).to_numpy(),
-    )
-    data[gi[0], gi[1], gi[2], gi[3], 0] = rows["re"].to_numpy()
-    data[gi[0], gi[1], gi[2], gi[3], 1] = rows["im"].to_numpy()
-    wt = np.where(rows["flag"].to_numpy(), -1.0, 1.0) * rows[
+    data[ti, bi, ci, pi, 0] = pdf["re"].to_numpy()
+    data[ti, bi, ci, pi, 1] = pdf["im"].to_numpy()
+    wt = np.where(pdf["flag"].to_numpy(), -1.0, 1.0) * pdf[
         "nsample"
     ].to_numpy()
-    data[gi[0], gi[1], gi[2], gi[3], 2] = wt
+    data[ti, bi, ci, pi, 2] = wt
 
     # Params filled per (time, baseline) from the ACTUAL rows (same
     # fancy indexing as the data cube) — uvw varies with time for any
@@ -213,22 +215,18 @@ def write_uvfits(pdf: pd.DataFrame, path: str, jd_zero: float) -> None:
     # uvw across all integrations would export wrong coordinates for
     # every time but the first.
     params = np.zeros((nt, nbl, 5), dtype=">f4")
-    params[gi[0], gi[1], 0] = rows["uu"].to_numpy()
-    params[gi[0], gi[1], 1] = rows["vv"].to_numpy()
-    params[gi[0], gi[1], 2] = rows["ww"].to_numpy()
+    params[ti, bi, 0] = pdf["uu"].to_numpy()
+    params[ti, bi, 1] = pdf["vv"].to_numpy()
+    params[ti, bi, 2] = pdf["ww"].to_numpy()
     # Baseline codes: AIPS 256-convention up to 255 antennas; beyond
     # that the 256 encoding silently collides (ant2+1 wraps), so
     # switch to the standard 2048*(a1+1)+(a2+1)+65536 extension (max
     # code ~4.3e6, exact in float32's 24-bit mantissa).
-    nant_hi = max(max(a1, a2) for a1, a2 in bls)
-    use2048 = nant_hi > 254
-    for (a1, a2), bi in b_ix.items():
-        if use2048:
-            params[:, bi, 3] = 2048 * (a1 + 1) + (a2 + 1) + 65536
-        else:
-            params[:, bi, 3] = 256 * (a1 + 1) + (a2 + 1)
-    for t, ti in t_ix.items():
-        params[ti, :, 4] = t - jd_zero  # PZERO5 carries the epoch
+    if max(a1.max(), a2.max()) > 254:
+        params[:, :, 3] = 2048 * (a1 + 1) + (a2 + 1) + 65536
+    else:
+        params[:, :, 3] = 256 * (a1 + 1) + (a2 + 1)
+    params[:, :, 4] = (times - jd_zero)[:, None]  # PZERO5 carries the epoch
 
     gcount = nt * nbl
     header = write_header(
@@ -251,7 +249,7 @@ def write_uvfits(pdf: pd.DataFrame, path: str, jd_zero: float) -> None:
             ("CRPIX2", 1.0),
             ("CDELT2", 1.0),
             ("CTYPE3", "STOKES"),
-            ("CRVAL3", float(POL_NAMES[pols[0]])),
+            ("CRVAL3", float(pols[0])),
             ("CRPIX3", 1.0),
             ("CDELT3", -1.0),
             ("CTYPE4", "FREQ"),
@@ -361,7 +359,7 @@ def parse_uvfits(name: str, buf: bytes) -> pd.DataFrame:
     pol0 = _hcard(h, "CRVAL3", name)
     pold = _hcard(h, "CDELT3", name)
     try:
-        pol_names = [POL_CODES[pol0 + i * pold] for i in range(npol)]
+        pol_names = [POL_NAME[pol0 + i * pold] for i in range(npol)]
     except KeyError as exc:
         raise ValueError(
             f"{name}: unknown polarization code {exc}"
@@ -371,9 +369,7 @@ def parse_uvfits(name: str, buf: bytes) -> pd.DataFrame:
     fpix = _hcard(h, "CRPIX4", name, float)
     freqs = f0 + (np.arange(nchan) + 1 - fpix) * fd
 
-    g = np.repeat(np.arange(gcount), nchan * npol)
-    c = np.tile(np.repeat(np.arange(nchan), npol), gcount)
-    s = np.tile(np.arange(npol), gcount * nchan)
+    g, c, s = cube_rows((gcount, nchan, npol))
     flat = data.reshape(gcount * nchan * npol, 3).astype("f8")
     wt = flat[:, 2]
     return pd.DataFrame(
@@ -393,26 +389,6 @@ def parse_uvfits(name: str, buf: bytes) -> pd.DataFrame:
             "vv": p["VV"][g],
             "ww": p["WW"][g],
         }
-    )
-
-
-def read_uvfits(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """Distributed uvfits scan: binaryFile listing + per-file numpy
-    parse in mapInPandas — one executor task per file, linear scale-out
-    in file count (MWA ships one file per coarse channel)."""
-    import os
-
-    files = spark.read.format("binaryFile").load(paths)
-
-    def parse(batches):
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                yield parse_uvfits(
-                    os.path.basename(row["path"]), row["content"]
-                )
-
-    return files.select("path", "content").mapInPandas(
-        parse, UVFITS_SCHEMA
     )
 
 
@@ -459,23 +435,10 @@ def parse_metafits(name: str, buf: bytes) -> pd.DataFrame:
     )
 
 
-def read_metafits(spark: SparkSession, paths: list[str]) -> DataFrame:
+def read_metafits(spark, paths: list[str]):
     """Metadata-only scan (S3): the read transfers each file once and
     parses headers executor-side; one row per observation."""
-    import os
-
-    files = spark.read.format("binaryFile").load(paths)
-
-    def parse(batches):
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                yield parse_metafits(
-                    os.path.basename(row["path"]), row["content"]
-                )
-
-    return files.select("path", "content").mapInPandas(
-        parse, METAFITS_SCHEMA
-    )
+    return scan_files(spark, paths, parse_metafits, METAFITS_SCHEMA)
 
 
 # ---------------------------------------------------------------- gpubox
@@ -488,13 +451,6 @@ GPUBOX_SCHEMA = (
 )
 
 
-def _bl_table(nant: int) -> np.ndarray:
-    """Row -> (ant1, ant2) for the ant1 <= ant2 lexicographic baseline
-    ordering (autos included)."""
-    a1, a2 = np.triu_indices(nant)
-    return np.stack([a1, a2], axis=1)
-
-
 def write_gpubox(
     pdf: pd.DataFrame, path: str, time_unix: dict[int, float]
 ) -> None:
@@ -505,14 +461,23 @@ def write_gpubox(
     integers, with TIME/MILLITIM cards per integration — the layout
     family mwalib handles for the reference (processors.py fits path),
     reduced to its FITS-standard mechanics."""
+    times = sorted(time_unix)
     chans = np.sort(pdf["chan"].unique())
-    pols = sorted(pdf["pol"].unique(), key=lambda p: -POL_NAMES[p])
+    pols, pi = pol_axis(pdf["pol"])
     nant = int(max(pdf["ant1"].max(), pdf["ant2"].max())) + 1
-    bls = _bl_table(nant)
-    b_ix = {(a1, a2): i for i, (a1, a2) in enumerate(bls)}
-    nbl, nc, npol = len(bls), len(chans), len(pols)
+    a1, a2 = np.triu_indices(nant)  # ant1 <= ant2, autos included
+    nbl, nc, npol = len(a1), len(chans), len(pols)
     scale = 0.125  # dyadic fixture grid: value = BSCALE * int
 
+    cell = (
+        cell_index(np.asarray(times), pdf["time_idx"], "time"),
+        cell_index((a1, a2), (pdf["ant1"], pdf["ant2"]), "baseline"),
+        cell_index(chans, pdf["chan"], "channel"),
+        pi,
+    )
+    data = np.zeros((len(times), nbl, nc, npol, 2), dtype=">i4")
+    data[cell + (0,)] = np.round(pdf["re"].to_numpy() / scale).astype("i8")
+    data[cell + (1,)] = np.round(pdf["im"].to_numpy() / scale).astype("i8")
     with open(path, "wb") as f:
         f.write(
             write_header(
@@ -523,23 +488,12 @@ def write_gpubox(
                     ("EXTEND", True),
                     ("NANT", nant),
                     ("NPOL", npol),
-                    ("POLS", ",".join(pols)),
+                    ("POLS", ",".join(POL_NAME[c] for c in pols)),
                     ("NCHAN", nc),
                 ]
             )
         )
-        for ti, t in enumerate(sorted(time_unix)):
-            sub = pdf[pdf["time_idx"] == t]
-            data = np.zeros((nbl, nc, npol, 2), dtype=">i4")
-            bi = sub[["ant1", "ant2"]].apply(tuple, axis=1).map(b_ix)
-            ci = sub["chan"].to_numpy() - chans[0]
-            pi = sub["pol"].map({p: i for i, p in enumerate(pols)})
-            data[bi, ci, pi, 0] = np.round(
-                sub["re"].to_numpy() / scale
-            ).astype("i8")
-            data[bi, ci, pi, 1] = np.round(
-                sub["im"].to_numpy() / scale
-            ).astype("i8")
+        for ti, t in enumerate(times):
             secs = time_unix[t]
             f.write(
                 write_header(
@@ -558,7 +512,7 @@ def write_gpubox(
                     ]
                 )
             )
-            raw = data.tobytes()
+            raw = data[ti].tobytes()
             f.write(raw + b"\x00" * _pad(len(raw)))
 
 
@@ -576,8 +530,8 @@ def parse_gpubox(name: str, buf: bytes) -> pd.DataFrame:
         raise ValueError(
             f"{name}: POLS lists {len(pols)} names but NPOL={npol}"
         )
-    bls = _bl_table(nant)
-    nbl = len(bls)
+    a1, a2 = np.triu_indices(nant)
+    nbl = len(a1)
     frames = []
     ti = 0
     while off < len(buf):
@@ -596,9 +550,7 @@ def parse_gpubox(name: str, buf: bytes) -> pd.DataFrame:
         ) * data.astype("f8")
         phys = phys.reshape(nbl, nc, npol, 2)
         t = float(h.get("TIME", 0)) + float(h.get("MILLITIM", 0)) / 1000.0
-        b = np.repeat(np.arange(nbl), nc * npol)
-        c = np.tile(np.repeat(np.arange(nc), npol), nbl)
-        s = np.tile(np.arange(npol), nbl * nc)
+        b, c, s = cube_rows((nbl, nc, npol))
         flat = phys.reshape(nbl * nc * npol, 2)
         frames.append(
             pd.DataFrame(
@@ -606,8 +558,8 @@ def parse_gpubox(name: str, buf: bytes) -> pd.DataFrame:
                     "file": name,
                     "time_unix": t,
                     "time_idx": ti,
-                    "ant1": bls[b, 0].astype("i4"),
-                    "ant2": bls[b, 1].astype("i4"),
+                    "ant1": a1[b].astype("i4"),
+                    "ant2": a2[b].astype("i4"),
                     "chan": c.astype("i4"),
                     "pol": pols[s],
                     "re": flat[:, 0],
@@ -617,21 +569,3 @@ def parse_gpubox(name: str, buf: bytes) -> pd.DataFrame:
         )
         ti += 1
     return pd.concat(frames, ignore_index=True)
-
-
-def read_gpubox(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """Distributed gpubox scan: binaryFile + per-file numpy parse."""
-    import os
-
-    files = spark.read.format("binaryFile").load(paths)
-
-    def parse(batches):
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                yield parse_gpubox(
-                    os.path.basename(row["path"]), row["content"]
-                )
-
-    return files.select("path", "content").mapInPandas(
-        parse, GPUBOX_SCHEMA
-    )

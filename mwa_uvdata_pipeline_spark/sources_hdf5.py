@@ -30,10 +30,11 @@ the codec is instead gated byte-level (golden layout tests) and
 end-to-end (write → Spark binaryFile read → aggregate equality vs the
 parquet original, plan ``s_uvh5_native``).
 
-Scale: one executor task per file via binaryFile + mapInPandas, the
-same shape as the uvfits/gpubox readers — MWA-style archives shard one
-file per observation/coarse channel, so file count is the unit of
-parallelism.
+The UVH5 layer keeps its own (time, ant1, ant2) blt order; the
+polarisation table, the row-to-cell indexer, the cell-to-row explosion
+and the Spark file scan (one task per file: MWA-style archives shard
+one file per observation or coarse channel) are shared with the other
+codecs (:mod:`codec`).
 """
 
 from __future__ import annotations
@@ -43,6 +44,13 @@ import zlib
 
 import numpy as np
 import pandas as pd
+
+from mwa_uvdata_pipeline_spark.codec import (
+    POL_NAME,
+    cell_index,
+    cube_rows,
+    pol_axis,
+)
 
 UNDEF = 0xFFFFFFFFFFFFFFFF
 SIGNATURE = b"\x89HDF\r\n\x1a\n"
@@ -524,50 +532,34 @@ def read_hdf5(path: str) -> dict[str, np.ndarray]:
 
 # ----------------------------------------------------------------- UVH5
 
-# AIPS polarization codes; names use the uvfits reader's upper-case
-# convention (sources_fits.POL_CODES) so both native readers emit
-# identical long-format rows for the same physical data
-AIPS_POL = {"XX": -5, "YY": -6, "XY": -7, "YX": -8}
-POL_NAME = {v: k for k, v in AIPS_POL.items()}
-
-
 def write_uvh5(pdf: pd.DataFrame, path: str) -> None:
     """Pack a long-format visibility frame (time_jd, ant1, ant2, chan,
     pol, freq_hz, re, im, nsample, flag, uu, vv, ww) into one UVH5
     file: /Header scalars + blt/freq/pol axes, /Data cubes shaped
-    (Nblts, Nfreqs, Npols) with h5py's compound (r, i) complex."""
+    (Nblts, Nfreqs, Npols) with h5py's compound (r, i) complex. The
+    file lists its frequencies, so any channel selection writes: a row
+    lands at its channel's position on the frequency axis."""
     blts = (
         pdf[["time_jd", "ant1", "ant2", "uu", "vv", "ww"]]
         .drop_duplicates(subset=["time_jd", "ant1", "ant2"])
         .sort_values(["time_jd", "ant1", "ant2"])
         .reset_index(drop=True)
     )
-    blt_index = {
-        (t, a1, a2): i
-        for i, (t, a1, a2) in enumerate(
-            zip(blts["time_jd"], blts["ant1"], blts["ant2"])
-        )
-    }
     freqs = np.sort(pdf["freq_hz"].unique())
     chan_of = pdf[["chan", "freq_hz"]].drop_duplicates().sort_values("chan")
     if not np.array_equal(chan_of["freq_hz"].to_numpy(), freqs):
         raise ValueError("chan order must follow frequency order")
-    pols = sorted(pdf["pol"].unique(), key=lambda p: -AIPS_POL[p.upper()])
-    pol_index = {p: i for i, p in enumerate(pols)}
+    pols, pi = pol_axis(pdf["pol"])
     nblts, nfreqs, npols = len(blts), len(freqs), len(pols)
+    bi = cell_index(
+        (blts["time_jd"], blts["ant1"], blts["ant2"]),
+        (pdf["time_jd"], pdf["ant1"], pdf["ant2"]),
+        "baseline-time",
+    )
+    ci = cell_index(chan_of["chan"], pdf["chan"], "channel")
     vis = np.zeros((nblts, nfreqs, npols), dtype="<c16")
     flags = np.zeros((nblts, nfreqs, npols), dtype="<i1")
     nsamples = np.zeros((nblts, nfreqs, npols), dtype="<f8")
-    bi = np.fromiter(
-        (
-            blt_index[(t, a1, a2)]
-            for t, a1, a2 in zip(pdf["time_jd"], pdf["ant1"], pdf["ant2"])
-        ),
-        dtype=np.int64,
-        count=len(pdf),
-    )
-    ci = pdf["chan"].to_numpy()
-    pi = pdf["pol"].map(pol_index).to_numpy()
     vis[bi, ci, pi] = pdf["re"].to_numpy() + 1j * pdf["im"].to_numpy()
     flags[bi, ci, pi] = pdf["flag"].to_numpy().astype("i1")
     nsamples[bi, ci, pi] = pdf["nsample"].to_numpy()
@@ -592,9 +584,7 @@ def write_uvh5(pdf: pd.DataFrame, path: str) -> None:
         "integration_time": np.full(nblts, 2.0, dtype="<f8"),
         "freq_array": freqs.astype("<f8"),
         "channel_width": np.full(nfreqs, cw, dtype="<f8"),
-        "polarization_array": np.array(
-            [AIPS_POL[p.upper()] for p in pols], dtype="<i8"
-        ),
+        "polarization_array": pols.astype("<i8"),
         "spw_array": np.array([0], dtype="<i8"),
         "uvw_array": blts[["uu", "vv", "ww"]].to_numpy("<f8"),
         # the UVH5 memo's required string items (fixed-length ASCII
@@ -641,10 +631,7 @@ def parse_uvh5(name: str, buf: bytes) -> pd.DataFrame:
         raise ValueError(
             f"{name}: unknown polarization code {exc}"
         ) from exc
-    bi, ci, pi = np.meshgrid(
-        np.arange(nblts), np.arange(nfreqs), np.arange(npols), indexing="ij"
-    )
-    bi, ci, pi = bi.ravel(), ci.ravel(), pi.ravel()
+    bi, ci, pi = cube_rows(vis.shape)
     return pd.DataFrame(
         {
             "file": name,
@@ -653,7 +640,7 @@ def parse_uvh5(name: str, buf: bytes) -> pd.DataFrame:
             "ant2": h["ant_2_array"][bi].astype("i4"),
             "chan": ci.astype("i4"),
             "freq_hz": h["freq_array"][ci],
-            "pol": [pols[i] for i in pi],
+            "pol": np.array(pols, dtype=object)[pi],
             "re": vis.real.ravel(),
             "im": vis.imag.ravel(),
             "nsample": nsamples.ravel(),
@@ -662,26 +649,4 @@ def parse_uvh5(name: str, buf: bytes) -> pd.DataFrame:
             "vv": h["uvw_array"][bi, 1],
             "ww": h["uvw_array"][bi, 2],
         }
-    )
-
-
-def read_uvh5(spark, paths: list[str]):
-    """Distributed UVH5 scan: binaryFile listing + per-file numpy parse
-    in mapInPandas — one executor task per file, the same shape as the
-    uvfits/gpubox readers."""
-    import os
-
-    from mwa_uvdata_pipeline_spark.sources_fits import UVFITS_SCHEMA
-
-    files = spark.read.format("binaryFile").load(paths)
-
-    def parse(batches):
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                yield parse_uvh5(
-                    os.path.basename(row["path"]), row["content"]
-                )
-
-    return files.select("path", "content").mapInPandas(
-        parse, UVFITS_SCHEMA
     )

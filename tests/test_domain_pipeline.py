@@ -112,17 +112,6 @@ def test_zscore_matches_numpy(spark_mf, numpy_mf):
     assert np.allclose(z_sp, z_np, equal_nan=True, atol=1e-9)
 
 
-def test_zscore_std_matches_numpy(vis, numpy_mf):
-    # classic mean/stddev z per (chan, pol) across time, scale==0 → z=0
-    ins_np = numpy_mf[0]
-    loc = np.nanmean(ins_np, axis=0)
-    scale = np.nanstd(ins_np, axis=0, ddof=1)
-    z_np = np.where(scale == 0, 0.0, (ins_np - loc) / np.where(scale == 0, 1.0, scale))
-    ins = incoherent_noise_spectrum(time_diff(vis), spectrum_type="cross")
-    z_sp = _cube(zscore(ins, method="std").toPandas(), "z")
-    assert np.allclose(z_sp, z_np, equal_nan=True, atol=1e-9)
-
-
 def test_narrow_flags_match_and_hit_plants(spark_mf, numpy_mf):
     narrow_np = numpy_mf[2]
     narrow_sp = _cube(spark_mf, "narrow_flag").astype(bool)

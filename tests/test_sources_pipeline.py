@@ -42,18 +42,29 @@ def test_read_visibilities_unsupported(spark):
         read_visibilities(spark, ["/data/foo.csvx"])
 
 
-def test_stub_readers_raise(spark):
+def test_stub_readers_raise(spark, tmp_path):
     # only casacore ms remains a stub: the FITS family AND uvh5 (via
-    # the native HDF5 codec) have real readers
+    # the native HDF5 codec) dispatch to real readers
     with pytest.raises(NotImplementedError, match="ms ingest needs"):
         READERS["ms"](spark, ["/data/a.ms"])
-    from mwa_uvdata_pipeline_spark.sources import (
-        read_gpubox_vis,
-        read_uvh5_vis,
-    )
+    import pandas as pd
 
-    assert READERS["fits"] is read_gpubox_vis
-    assert READERS["uvh5"] is read_uvh5_vis
+    from mwa_uvdata_pipeline_spark.sources_fits import write_gpubox
+    from mwa_uvdata_pipeline_spark.sources_hdf5 import write_uvh5
+
+    pdf = pd.DataFrame(
+        {"time_idx": [0, 0], "time_jd": 2460000.5, "ant1": [0, 0],
+         "ant2": [0, 1], "chan": 0, "freq_hz": 1.6e8, "pol": "XX",
+         "re": [1.0, 2.0], "im": 0.5, "nsample": 1.0, "flag": False,
+         "uu": 0.0, "vv": 0.0, "ww": 0.0}
+    )
+    write_gpubox(pdf, str(tmp_path / "g.fits"), {0: 1.7e9})
+    write_uvh5(pdf, str(tmp_path / "h.uvh5"))
+    gpubox = read_visibilities(spark, [str(tmp_path / "g.fits")])
+    assert "time_unix" in gpubox.columns
+    assert gpubox.count() == 3  # dense triu grid of 2 antennas
+    uvh5 = read_visibilities(spark, [str(tmp_path / "h.uvh5")])
+    assert sorted(r["re"] for r in uvh5.collect()) == [1.0, 2.0]
 
 
 def test_batch_arithmetic_matches_reference_intent():
