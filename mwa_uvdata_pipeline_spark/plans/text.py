@@ -3214,8 +3214,19 @@ def _sql_sem_keyed() -> str:
         "adaptive schedule yields at oracle scale.",
 )
 def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The reused intermediates ``assign``, ``cc``, ``norms`` and
+    ``ids`` are stored by an eager ``localCheckpoint`` (the
+    ``pipeline.read_ins`` pattern): their blocks belong to the returned
+    frame and Spark's context cleaner drops them once it is garbage, so
+    a later call plans from its own data, as in a fresh session, not
+    from this call's stored blocks (``_km_fit``'s ``pts`` and ``cents``
+    are still persists that stay cached). The price is fault
+    tolerance: the stored blocks have no lineage, so if an executor
+    holding them is lost, the frame fails rather than recomputes and
+    the caller must call ``dedup_semantic`` again."""
     pts, assign, cents = _km_fit(spark, sf_dir)
-    assign = assign.persist()  # consumed by cent-cos AND pair legs
+    # consumed by cent-cos AND pair legs
+    assign = assign.localCheckpoint(eager=True)
     # fan_out: the norms + T LSH keys leg over raw embeddings is
     # otherwise the single fixture-scan task (guide §2.5)
     emb = fan_out(table(spark, sf_dir, "embeddings"), "vec_id")
@@ -3252,17 +3263,17 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("dotc") / (F.col("vn") * F.col("cn")), 6)
                 .alias("cent_cos"),
         )
-        .persist()
+        .localCheckpoint(eager=True)
     )
 
     # consumed 3x (LSH keying + both exact-cosine probe sides):
-    # persist so the scan + per-row norm fold runs once, not three
+    # checkpointed so the scan + per-row norm fold runs once, not three
     # times (guide §5 — reused AND recompute-heavy)
     norms = emb.select(
         "vec_id",
         "embedding",
         F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("nrm"),
-    ).persist()
+    ).localCheckpoint(eager=True)
     keyed = (
         norms.join(assign, "vec_id")
         .select(
@@ -3277,11 +3288,11 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # candidates carry IDs only (the dedup_embedding_cosine lesson);
     # each surviving pair pays for one exact-cosine evaluation.
-    # ids is persisted: the self-join otherwise recomputes the whole
+    # ids is checkpointed: the self-join otherwise recomputes the whole
     # LSH-keying lineage (norms join + T keyed explodes) once PER SIDE
     # — event-log attribution showed two ~370 ms 32-task stages doing
     # identical work (guide §5 reuse).
-    ids = keyed.select("cid", "t", "k", "vec_id").persist()
+    ids = keyed.select("cid", "t", "k", "vec_id").localCheckpoint(eager=True)
     cand = (
         ids.alias("ca")
         .join(
@@ -3318,6 +3329,11 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     # AQE-uncoalescible, spreading the cosine work across the real
     # parallelism (guide §2: partition for the expensive stage, not
     # the cheap bytes); N tracks defaultParallelism, not a constant.
+    # Spark drops a keyed repartition whose child already satisfies it,
+    # so ids must not be a persist: one left materialised in the
+    # session's cache by an earlier call broadcasts the candidate join,
+    # whose output keeps fan_out's hash(vec_id) partitioning as va and
+    # so removes the first repartition. A checkpoint reports none.
     par = emb.sparkSession.sparkContext.defaultParallelism
     pairs = (
         cand.repartition(par, "va")

@@ -265,3 +265,17 @@ def test_dedup_semantic_pins_pair_join_parallelism(spark):
     plan = _executed_plan(df)
     assert "hashpartitioning(va#" in plan and "hashpartitioning(vb#" in plan
     assert plan.count("REPARTITION_BY_NUM") >= 2
+
+
+def test_dedup_semantic_pin_survives_a_full_collect(spark):
+    """A long session must plan dedup_semantic like a fresh one: after
+    one call has been fully collected, a rebuilt frame still carries
+    both keyed pair-join repartitions. Intermediates left cached by the
+    first call would satisfy the first repartition and remove it."""
+    from mwa_uvdata_pipeline_spark.plans import load_all
+
+    plan_fn = load_all()["dedup_semantic"].spark
+    assert len(plan_fn(spark, SF_SMALL).toPandas()) > 0
+    plan = _executed_plan(plan_fn(spark, SF_SMALL))
+    assert "hashpartitioning(va#" in plan and "hashpartitioning(vb#" in plan
+    assert plan.count("REPARTITION_BY_NUM") >= 2
