@@ -156,7 +156,8 @@ class FileSet:
     with every violation aggregated into one error, expose the dynamic
     ``has_<type>`` / ``<type>`` accessor surface the reference builds
     with a metaclass (configurators.py:11-37,188-201) — here a plain
-    ``__getattr__`` over the catalog DataFrame.
+    ``__getattr__`` over the catalog DataFrame, whose one summary row
+    (read at construction) answers ``has_<type>`` and validation.
 
     The DataFrame itself (``.catalog``) is the scale path; this class
     is the convenience wrapper for reference users switching over.
@@ -169,22 +170,17 @@ class FileSet:
         validate: bool = True,
         on_error: str = "raise",
     ) -> None:
-        from mwa_uvdata_pipeline_spark.validation import (
-            assert_valid,
-            validation_report,
-        )
+        from mwa_uvdata_pipeline_spark.validation import catalog_summary, raise_at_end, violations
 
         self.spark = spark
-        self.catalog = catalog_from_paths(spark, files).cache()
+        self.catalog = catalog_from_paths(spark, files)
+        self._summary = catalog_summary(self.catalog)
         if validate:
-            assert_valid(validation_report(spark, self.catalog), on_error)  # type: ignore[arg-type]
+            raise_at_end(violations(self._summary), on_error)  # type: ignore[arg-type]
 
     def __getattr__(self, name: str):
         if name.startswith("has_") and name[4:] in SUPPORTED_TYPES:
-            t = name[4:]
-            return (
-                self.catalog.where(F.col("file_type") == t).limit(1).count() > 0
-            )
+            return name[4:] in self._summary["types"]
         if name in SUPPORTED_TYPES:
             return [
                 r["file_path"]
