@@ -23,7 +23,9 @@ def catalog(spark, fixtures_dir):
     files = spark.read.parquet(str(fixtures_dir / "file_catalog.parquet"))
     cat = with_derived_columns(files.select("file_path", "size_bytes"))
     channels = spark.read.parquet(str(fixtures_dir / "channels.parquet"))
-    return resolve_channels(cat, channels).cache()
+    cat = resolve_channels(cat, channels).cache()
+    yield cat
+    cat.unpersist()
 
 
 def test_derived_columns(catalog):
